@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """Self-test of the benchmark at tiny size (20k taxi rows, harness scale
-0.001, one gate per family). Checks that:
+0.001, one gate per family, one streaming gate). Checks that:
 
   * every workload runs, with and without tracing, and its outputs check out;
   * every metric BENCHMARK.json names is emitted, with its unit;
@@ -36,18 +36,24 @@ def fail(msg):
     sys.exit(1)
 
 
-def one_gate_per_family():
+def tiny_gates():
+    """One gate per family for gates_batch, the first streaming gate for
+    gates_stream."""
     first = {}
-    for g in run.read_gates(run.GATES_FILE):
+    for g in run.read_gates(run.GATES_FILES["gates_batch"]):
         first.setdefault(run.family(g), g)
     missing = set(run.GATE_FAMILIES) - set(first)
     if missing:
         fail(f"gate list has no gate for families {sorted(missing)}")
-    path = os.path.join(ROOT, ".bench_out", "selftest_gates.txt")
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    with open(path, "w") as fh:
-        fh.write("\n".join(first[f] for f in run.GATE_FAMILIES) + "\n")
-    return path
+    lists = {"gates_batch": [first[f] for f in run.GATE_FAMILIES],
+             "gates_stream": run.read_gates(run.GATES_FILES["gates_stream"])[:1]}
+    paths = {}
+    for w, gates in lists.items():
+        paths[w] = os.path.join(ROOT, ".bench_out", f"selftest_{w}.txt")
+        os.makedirs(os.path.dirname(paths[w]), exist_ok=True)
+        with open(paths[w], "w") as fh:
+            fh.write("\n".join(gates) + "\n")
+    return paths
 
 
 def bench(workload, trace, extra=()):
@@ -127,10 +133,10 @@ def etl_equivalence(work):
 
 def main():
     spec = json.load(open(os.path.join(ROOT, "BENCHMARK.json")))
-    gates_file = one_gate_per_family()
+    gates_files = tiny_gates()
     kept = set(glob.glob(os.path.join(ROOT, ".bench_out", "taxi_etl-*")))
     for w in (x["name"] for x in spec["workloads"]):
-        gates = ["--gates-file", gates_file] if w == "gates_batch" else []
+        gates = ["--gates-file", gates_files[w]] if w in gates_files else []
         keep = ["--keep"] if w == "taxi_etl" else []
         r0, _ = bench(w, 0, gates + keep)
         check_metrics(r0, spec["end_to_end"], f"{w} end-to-end")
