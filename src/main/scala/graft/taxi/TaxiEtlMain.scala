@@ -30,7 +30,17 @@ object TaxiEtlMain {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val (report, factRows) = run(spark, input, outDir)
+    println(s"[transform] ${report.totalProcessed} rows, " +
+      s"${report.anomalyCount} anomalies (${f"${report.anomalyRatePct}%.2f"}%)")
+    println(s"[load] fact_trips: $factRows rows")
+    spark.stop()
+  }
 
+  /** One pass from the raw trips at `input` to every output under `outDir`;
+    * returns the quality report and the committed fact's row count. The
+    * two cached transform branches are released before it returns. */
+  def run(spark: SparkSession, input: String, outDir: String): (TaxiPipeline.QualityReport, Long) = {
     // extract (reference extract.py)
     val extracted = Sinks.requireNonEmpty(
       TaxiPipeline.extract(spark.read.parquet(input)), "extract")
@@ -44,34 +54,18 @@ object TaxiEtlMain {
     if (!anomCached.isEmpty)
       Sinks.writeTimestamped(anomCached, s"$outDir/transform")
     val report = TaxiPipeline.qualityReport(validCached, anomCached)
-    val detailJson = report.anomalyDetails.toSeq.sortBy(-_._2)
-      .map { case (k, v) => s""""$k": $v""" }.mkString("{", ", ", "}")
-    def num(d: Double): String = if (d.isNaN || d.isInfinite) "null" else d.toString
-    val reportJson =
-      s"""{
-         |  "total_processed": ${report.totalProcessed},
-         |  "anomaly_count": ${report.anomalyCount},
-         |  "anomaly_rate": "${f"${report.anomalyRatePct}%.2f"}%",
-         |  "anomaly_details": $detailJson,
-         |  "data_quality_metrics": {
-         |    "avg_trip_duration": ${num(report.avgTripDuration)},
-         |    "avg_speed": ${num(report.avgSpeed)},
-         |    "total_fare_amount": ${num(report.totalFareAmount)}
-         |  }
-         |}""".stripMargin
     val reportPath = java.nio.file.Paths.get(s"$outDir/transform/transformation_report.json")
     java.nio.file.Files.createDirectories(reportPath.getParent)
-    java.nio.file.Files.writeString(reportPath, reportJson)
-    println(s"[transform] ${report.totalProcessed} rows, " +
-      s"${report.anomalyCount} anomalies (${f"${report.anomalyRatePct}%.2f"}%)")
+    java.nio.file.Files.writeString(reportPath, report.json)
 
     // load (reference load.py) — star schema, engine-side surrogate keys
     Sinks.writeParquet(TaxiWarehouse.dimTime(validCached), s"$outDir/warehouse/dim_time")
     Sinks.writeParquet(TaxiWarehouse.dimLocation(validCached), s"$outDir/warehouse/dim_location")
     Sinks.writeParquet(TaxiWarehouse.dimPayment(validCached), s"$outDir/warehouse/dim_payment")
-    val fact = TaxiWarehouse.factTrips(validCached)
-    Sinks.writeParquet(fact, s"$outDir/warehouse/fact_trips")
-    println(s"[load] fact_trips: ${spark.read.parquet(s"$outDir/warehouse/fact_trips").count()} rows")
-    spark.stop()
+    Sinks.writeParquet(TaxiWarehouse.factTrips(validCached), s"$outDir/warehouse/fact_trips")
+    val factRows = spark.read.parquet(s"$outDir/warehouse/fact_trips").count()
+    validCached.unpersist()
+    anomCached.unpersist()
+    (report, factRows)
   }
 }

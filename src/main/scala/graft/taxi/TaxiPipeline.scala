@@ -44,13 +44,13 @@ object TaxiPipeline {
   /** Derived metrics (reference `transform.py:33-41`): duration in minutes
     * from timestamp subtraction, speed = distance/hours rounded to 2 (the
     * reference rounds BEFORE the range rule — preserved). ÷0 diverges:
-    * pandas yields Infinity, Spark non-ANSI double division yields NULL —
+    * pandas yields Infinity, `try_divide` yields NULL with ANSI on or off —
     * both are tagged anomalous by the (null-aware) speed rule below, and
     * the duration<=0 rule fires first anyway, so the split matches. */
   def calculateMetrics(df: DataFrame): DataFrame =
     df.withColumn("trip_duration",
         (col("tpep_dropoff_datetime").cast("long") - col("tpep_pickup_datetime").cast("long")) / 60.0)
-      .withColumn("avg_speed", round(col("trip_distance") / (col("trip_duration") / 60.0), 2))
+      .withColumn("avg_speed", round(try_divide(col("trip_distance"), col("trip_duration") / 60.0), 2))
 
   /** The five prioritized rules, exact labels and bounds
     * (reference `transform.py:47-53`; pandas `between` is inclusive).
@@ -109,31 +109,60 @@ object TaxiPipeline {
     }
 
   /** Full transform stage (reference `transform.py:146-175`): metrics →
-    * anomaly split → time features → encoding → dedup. Returns (valid,
-    * anomalies); caller decides caching/sinks. */
+    * anomaly split → dedup → time features → encoding. The reference dedups
+    * last; the features are row-wise functions of the kept row, so dedup
+    * first gives the same rows while its shuffle carries only fixed-width
+    * columns and plans as a hash aggregate. Returns (valid, anomalies);
+    * caller decides caching/sinks. */
   def transform(extracted: DataFrame): (DataFrame, DataFrame) = {
     val tagged = tagAnomalies(calculateMetrics(extracted))
-    val valid = dedupTrips(encodeFeatures(addTimeFeatures(validTrips(tagged))))
+    val valid = encodeFeatures(addTimeFeatures(dedupTrips(validTrips(tagged))))
     (valid, anomalies(tagged))
   }
 
   /** Quality report (reference `transform.py:129-144`) as a tiny driver-side
-    * struct — ONE aggregation pass per branch, not four. */
+    * struct, from ONE grouped aggregate over both branches: the group with
+    * a null reason is the valid branch. */
   case class QualityReport(totalProcessed: Long, anomalyCount: Long, anomalyRatePct: Double,
       anomalyDetails: Map[String, Long], avgTripDuration: Double, avgSpeed: Double,
-      totalFareAmount: Double)
+      totalFareAmount: Double) {
+
+    /** `transformation_report.json`: details by descending count, and a
+      * metric that is not a number (empty valid branch) as null. */
+    def json: String = {
+      val detailJson = anomalyDetails.toSeq.sortBy(-_._2)
+        .map { case (k, v) => s""""$k": $v""" }.mkString("{", ", ", "}")
+      def num(d: Double): String = if (d.isNaN || d.isInfinite) "null" else d.toString
+      s"""{
+         |  "total_processed": $totalProcessed,
+         |  "anomaly_count": $anomalyCount,
+         |  "anomaly_rate": "${f"$anomalyRatePct%.2f"}%",
+         |  "anomaly_details": $detailJson,
+         |  "data_quality_metrics": {
+         |    "avg_trip_duration": ${num(avgTripDuration)},
+         |    "avg_speed": ${num(avgSpeed)},
+         |    "total_fare_amount": ${num(totalFareAmount)}
+         |  }
+         |}""".stripMargin
+    }
+  }
 
   def qualityReport(valid: DataFrame, anomalies: DataFrame): QualityReport = {
-    val v = valid.agg(count(lit(1)), avg("trip_duration"), avg("avg_speed"), sum("fare_amount"))
-      .head()
-    val detail = anomalies.groupBy("rejection_reason").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val measures = Seq("trip_duration", "avg_speed", "fare_amount")
+    val groups = valid.select(lit(null).cast("string").as("rejection_reason") +: measures.map(col): _*)
+      .unionByName(anomalies.select("rejection_reason", measures: _*))
+      .groupBy("rejection_reason")
+      .agg(count(lit(1)), avg("trip_duration"), avg("avg_speed"), sum("fare_amount"))
+      .collect()
+    val (validGroup, reasons) = groups.partition(_.isNullAt(0))
+    val v = validGroup.headOption
+    val detail = reasons.map(r => r.getString(0) -> r.getLong(1)).toMap
     val nAnom = detail.values.sum
-    val total = v.getLong(0) + nAnom
-    // aggregates are null when the valid branch is empty (100% anomalous
-    // input) — report NaN rather than NPE mid-pipeline
-    def d(i: Int): Double = if (v.isNullAt(i)) Double.NaN else v.getDouble(i)
+    val total = v.fold(0L)(_.getLong(1)) + nAnom
+    // no valid group (100% anomalous input), or only null measures in it:
+    // report NaN rather than NPE mid-pipeline
+    def d(i: Int): Double = v.filterNot(_.isNullAt(i)).fold(Double.NaN)(_.getDouble(i))
     QualityReport(total, nAnom, if (total == 0) 0 else nAnom * 100.0 / total, detail,
-      d(1), d(2), d(3))
+      d(2), d(3), d(4))
   }
 }

@@ -2,7 +2,9 @@ package graft.taxi
 
 import graft.SparkSpec
 import java.sql.Timestamp
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit, when}
 
 /** Reference-semantics tests on a synthesized taxi fixture (FIXTURES.md §A)
   * with KNOWN per-rule violation counts — mirrors the golden ratios the
@@ -12,36 +14,7 @@ class TaxiPipelineSpec extends SparkSpec {
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
-  /** (vendor, pickup, dropoff, passengers, distance, PU, DO, ratecode,
-    * payment, fare, total) rows — see comments for which rule each trips. */
-  private lazy val fixture: DataFrame = {
-    val rows = Seq[(Int, String, String, Int, Double, Int, Int, Int, Int, Double, Double)](
-      // 3 clean trips (10 km/h-ish speeds, everything in range)
-      (1, "2024-03-01 08:00:00", "2024-03-01 08:30:00", 2, 5.0, 10, 20, 1, 1, 20.0, 24.0),
-      (2, "2024-03-01 13:00:00", "2024-03-01 13:12:00", 1, 2.0, 11, 21, 2, 2, 10.0, 11.0),
-      (1, "2024-03-02 19:00:00", "2024-03-02 20:00:00", 3, 15.0, 12, 22, 1, 4, 40.0, 48.0),
-      // Durée invalide: dropoff == pickup (duration 0)
-      (1, "2024-03-03 10:00:00", "2024-03-03 10:00:00", 1, 3.0, 13, 23, 1, 1, 12.0, 14.0),
-      // Durée invalide even though distance ALSO out of range (priority!)
-      (1, "2024-03-03 11:00:00", "2024-03-03 10:59:00", 1, 500.0, 13, 23, 1, 1, 12.0, 14.0),
-      // Distance hors limites (0.05 < 0.1)
-      (2, "2024-03-04 09:00:00", "2024-03-04 09:10:00", 1, 0.05, 14, 24, 1, 2, 8.0, 9.0),
-      // Montant de course invalide (fare <= 0), distance fine
-      (1, "2024-03-05 09:00:00", "2024-03-05 09:20:00", 1, 4.0, 15, 25, 1, 1, 0.0, 0.0),
-      // Passagers invalides (0 passengers)
-      (1, "2024-03-06 09:00:00", "2024-03-06 09:20:00", 0, 4.0, 16, 26, 1, 1, 15.0, 17.0),
-      // Vitesse irréaliste: 60 km in 10 min = 360 km/h
-      (1, "2024-03-07 09:00:00", "2024-03-07 09:10:00", 1, 60.0, 17, 27, 1, 1, 90.0, 95.0),
-      // duplicate (pickup, dropoff) of row 1 — dedup victim
-      (2, "2024-03-01 08:00:00", "2024-03-01 08:30:00", 4, 5.5, 18, 28, 1, 2, 21.0, 25.0),
-      // payment_type 5 → label null → silently dropped from the fact table
-      (1, "2024-03-08 09:00:00", "2024-03-08 09:30:00", 1, 5.0, 19, 29, 99, 5, 20.0, 24.0)
-    )
-    import spark.implicits._
-    rows.toDF("VendorID", "tpep_pickup_datetime", "tpep_dropoff_datetime", "passenger_count",
-      "trip_distance", "PULocationID", "DOLocationID", "RatecodeID", "payment_type",
-      "fare_amount", "total_amount")
-  }
+  private lazy val fixture: DataFrame = TaxiFixture.trips(spark)
 
   private lazy val extracted = TaxiPipeline.extract(fixture)
   private lazy val tagged = TaxiPipeline.tagAnomalies(TaxiPipeline.calculateMetrics(extracted))
@@ -161,10 +134,54 @@ class TaxiPipelineSpec extends SparkSpec {
     val (valid, _) = TaxiPipeline.transform(extracted)
     val fact = TaxiWarehouse.factTrips(valid)
     assert(fact.count() == 3) // 4 valid - 1 payment_label null
-    // FK integrity: every pk resolves
-    val dims = TaxiWarehouse.dimLocation(valid)
-    val badFk = fact.join(dims, fact("pickup_loc_pk") === dims("location_pk"), "left_anti")
-    assert(badFk.count() == 0)
     assert(fact.schema("fare_amount").dataType.typeName == "decimal(8,2)")
+    // FK integrity and key equivalence against the values in `valid`,
+    // cached so every frame reads the same row of the duplicate pair
+    val kept = valid.cache()
+    try {
+      StarSchemaCheck(kept)
+      // a null pickup has no dim_time row: that trip drops too
+      val noPickup = kept.withColumn("tpep_pickup_datetime",
+        when(col("fare_amount") === 40.0, lit(null)).otherwise(col("tpep_pickup_datetime")))
+      assert(TaxiWarehouse.factTrips(noPickup).count() == 2)
+      StarSchemaCheck(noPickup)
+    } finally kept.unpersist()
+  }
+
+  test("ANSI mode tags the fixture the same: a zero duration divides to NULL, not an error") {
+    def tags(): Seq[(Short, String, Option[String])] =
+      TaxiPipeline.tagAnomalies(TaxiPipeline.calculateMetrics(TaxiPipeline.extract(fixture)))
+        .select("VendorID", "tpep_pickup_datetime", "rejection_reason").collect()
+        .map(r => (r.getShort(0), r.get(1).toString, Option(r.getString(2)))).toSeq.sorted
+    val lenient = tags()
+    val before = spark.conf.getOption("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    val strict = try tags() finally before match {
+      case Some(v) => spark.conf.set("spark.sql.ansi.enabled", v)
+      case None => spark.conf.unset("spark.sql.ansi.enabled")
+    }
+    assert(strict == lenient)
+    assert(strict.count(_._3.contains("Durée invalide")) == 2)
+  }
+
+  test("quality report of an all-anomalous input: valid metrics are NaN, null in the JSON") {
+    val anomalous = fixture.filter(!col("fare_amount").isin(20.0, 10.0, 40.0, 21.0))
+    val (valid, anoms) = TaxiPipeline.transform(TaxiPipeline.extract(anomalous))
+    val r = TaxiPipeline.qualityReport(valid, anoms)
+    assert(r.totalProcessed == 6 && r.anomalyCount == 6 && r.anomalyRatePct == 100.0)
+    assert(r.avgTripDuration.isNaN && r.avgSpeed.isNaN && r.totalFareAmount.isNaN)
+    val metrics = new ObjectMapper().readTree(r.json).get("data_quality_metrics")
+    Seq("avg_trip_duration", "avg_speed", "total_fare_amount").foreach(m =>
+      assert(metrics.get(m).isNull, s"$m in ${r.json}"))
+  }
+
+  test("quality report of an input with no anomalies: the details map is empty") {
+    val clean = fixture.filter(col("fare_amount").isin(20.0, 10.0, 40.0, 21.0))
+    val (valid, anoms) = TaxiPipeline.transform(TaxiPipeline.extract(clean))
+    val r = TaxiPipeline.qualityReport(valid, anoms)
+    assert(r.anomalyDetails.isEmpty && r.anomalyCount == 0 && r.anomalyRatePct == 0.0)
+    assert(r.totalProcessed == 4) // 5 clean - 1 duplicate
+    assert(r.avgTripDuration == (30 + 12 + 60 + 30) / 4.0)
+    assert(new ObjectMapper().readTree(r.json).get("anomaly_details").size() == 0)
   }
 }

@@ -93,4 +93,38 @@ class TaxiPropertiesSpec extends SparkSpec {
       assert(r.anomalyRatePct >= 0.0 && r.anomalyRatePct <= 100.0)
     }
   }
+
+  test("random inputs: star-schema keys resolve and equal their values' keys") {
+    for (seed <- 20L to 22L) {
+      val trips = draw(Gen.listOfN(80, tripGen), seed)
+      val (valid, _) = TaxiPipeline.transform(TaxiPipeline.extract(toDf(trips)))
+      // cached so the dims, the fact and the check read the same kept rows
+      val kept = valid.cache()
+      try StarSchemaCheck(kept) finally kept.unpersist()
+    }
+  }
+
+  test("random inputs: the one-aggregate report equals the two-aggregate formula") {
+    for (seed <- 30L to 32L) {
+      val trips = draw(Gen.listOfN(80, tripGen), seed)
+      val (v0, a0) = TaxiPipeline.transform(TaxiPipeline.extract(toDf(trips)))
+      // cached so both formulas read the same rows kept by the dedup
+      val (valid, anoms) = (v0.cache(), a0.cache())
+      try {
+        val r = TaxiPipeline.qualityReport(valid, anoms)
+        val v = valid.agg(count(lit(1)), avg("trip_duration"), avg("avg_speed"),
+          sum("fare_amount")).head()
+        val detail = anoms.groupBy("rejection_reason").count()
+          .collect().map(x => x.getString(0) -> x.getLong(1)).toMap
+        assert(r.anomalyDetails == detail, s"seed $seed")
+        assert(r.anomalyCount == detail.values.sum)
+        assert(r.totalProcessed == v.getLong(0) + detail.values.sum)
+        Seq(r.avgTripDuration -> 1, r.avgSpeed -> 2, r.totalFareAmount -> 3).foreach {
+          case (got, i) =>
+            val want = v.getDouble(i)
+            assert(math.abs(got - want) <= 1e-9 * math.abs(want), s"seed $seed: $got vs $want")
+        }
+      } finally { valid.unpersist(); anoms.unpersist() }
+    }
+  }
 }
