@@ -3571,7 +3571,7 @@ object SparkEntry {
 
   /** Two-stream 2×16-bit md5-witness simhash (x4d_md5): stream 2 votes
     * over md5(token ‖ '#h2') — the DuckDB mirror of
-    * DocDedup.simhash2x16Md5Of (one token pass, both hashes per token). */
+    * DocDedup.simhash2x16Md5Of (both halves per doc in one projection). */
   private val simhash2x16Cte: String = {
     def fp(h: String): String =
       (0 until 16).map(i =>

@@ -203,23 +203,27 @@ object DocDedup {
   def simhashMd5(spark: SparkSession, dir: String, bits: Int = 16): DataFrame =
     simhashMd5Of(docsWide(spark, dir), bits).orderBy("doc_id")
 
-  /** The md5-SimHash construction over an arbitrary (doc_id, text) frame
-    * (shared by x4b and the incremental-ingest dedup). */
-  def simhashMd5Of(docs: DataFrame, bits: Int = 16): DataFrame = {
-    // explode-then-aggregate (see minhashMd5): each token is md5-hashed
-    // ONCE, with the `bits` per-bit votes as aggregate sums over the flat
-    // token rows — the per-bit `aggregate(hs, …)` formulation recomputed
-    // the full token-hash array for every bit (bits× the md5 work).
-    val hashed = docs
-      .select(col("doc_id"), explode(tokensCol).as("t"))
-      .select(col("doc_id"),
-        conv(substring(md5(col("t").cast("binary")), 1, 15), 16, 10).cast("long").as("h"))
-    val fp = (0 until bits).map { i =>
-      val vote = sum(when(shiftright(col("h"), i).bitwiseAND(1) === 1, 1).otherwise(-1))
-      when(vote > 0, shiftleft(lit(1L), i)).otherwise(lit(0L))
-    }.reduce(_ + _)
-    hashed.groupBy("doc_id").agg(fp.as("simhash16"))
+  /** The md5-SimHash kernel over one row's tokens: each token is md5-hashed
+    * once (first 60 bits as a long) and the bit votes run in the codegen'd
+    * `SimHash64` loop, masked to the low `bits`. Bit i is set iff more
+    * tokens have bit i set than clear — the per-bit vote aggregate, as a
+    * per-row projection: no explode, shuffle or join back on doc_id. A null
+    * token array gives a null fingerprint. */
+  def simhashMd5Kernel(tokens: Column, bits: Int = 16): Column = {
+    // the token hash has 60 bits: a wider mask would read bits that every
+    // token votes 0, i.e. constant-zero fingerprint bits
+    require(bits >= 1 && bits <= 60, s"md5 token hash has 60 bits, asked for $bits")
+    graft.functions.HashExpressions.simhash64(transform(tokens, t =>
+      conv(substring(md5(t.cast("binary")), 1, 15), 16, 10).cast("long")))
+      .bitwiseAND((1L << bits) - 1)
   }
+
+  /** The md5-SimHash construction over an arbitrary (doc_id, text) frame
+    * (shared by x4b and the incremental-ingest dedup); a null text gives
+    * no row. */
+  def simhashMd5Of(docs: DataFrame, bits: Int = 16): DataFrame =
+    docs.filter(col("text").isNotNull)
+      .select(col("doc_id"), simhashMd5Kernel(tokensCol, bits).as("simhash16"))
 
   /** md5-witness SimHash near-dup PIPELINE (oracle-checked end to end —
     * the simhash analogue of x15): 16-bit md5 simhash, blocked on 2×8-bit
@@ -346,22 +350,11 @@ object DocDedup {
   /** md5-witness for the x4d TWO-STREAM construction: two 16-bit md5
     * simhash halves over the same token stream — the second half votes
     * over md5(token ‖ "#h2"), mirroring simhashDigest128's salted second
-    * xxhash64 stream — computed in ONE token pass (both hashes per
-    * exploded token row, 32 vote sums in one aggregate). */
-  def simhash2x16Md5Of(docs: DataFrame): DataFrame = {
-    val hashed = docs
-      .select(col("doc_id"), explode(tokensCol).as("t"))
-      .select(col("doc_id"),
-        conv(substring(md5(col("t").cast("binary")), 1, 15), 16, 10).cast("long").as("h1"),
-        conv(substring(md5(concat(col("t"), lit("#h2")).cast("binary")), 1, 15), 16, 10)
-          .cast("long").as("h2"))
-    def fp(h: Column): Column = (0 until 16).map { i =>
-      val vote = sum(when(shiftright(h, i).bitwiseAND(1) === 1, 1).otherwise(-1))
-      when(vote > 0, shiftleft(lit(1L), i)).otherwise(lit(0L))
-    }.reduce(_ + _)
-    hashed.groupBy("doc_id")
-      .agg(fp(col("h1")).as("sh_lo16"), fp(col("h2")).as("sh_hi16"))
-  }
+    * xxhash64 stream — both from `simhashMd5Kernel` in one projection. */
+  def simhash2x16Md5Of(docs: DataFrame): DataFrame =
+    docs.filter(col("text").isNotNull)
+      .select(col("doc_id"), simhashMd5Kernel(tokensCol).as("sh_lo16"),
+        simhashMd5Kernel(transform(tokensCol, t => concat(t, lit("#h2")))).as("sh_hi16"))
 
   /** x4d md5 witness PIPELINE (oracle-checked end to end): the 128-bit
     * two-stream near-dup shape at oracle-expressible width — 2×16-bit
@@ -1176,70 +1169,57 @@ object DocDedup {
     * 100 TB design: the historical side reduces to two DISTINCT signature
     * sets (content hashes + simhashes) — the persisted index a daily
     * ingest would maintain incrementally; both joins are hash equi-joins
-    * on short keys, and the incoming batch is scanned once behind a lazy
-    * localCheckpoint barrier (the signature agg must not recompute per
-    * branch; GC releases it, see minhashPairs). */
+    * on short keys. This is the batch twin of the e15 stream: the same
+    * `signatureIndexOf` and `probeSignatureIndexAny`, over one batch. */
   def incrementalDedup(spark: SparkSession, dir: String): DataFrame =
     incrementalDedupOf(docsWide(spark, dir), col("doc_id") % 2 === 0)
 
   /** The incremental-dedup construction over an arbitrary (doc_id, text)
     * frame with an `isExisting` predicate marking the historical side. */
-  def incrementalDedupOf(docs: DataFrame, isExisting: Column): DataFrame = {
-    val sig = docs
-      .select(col("doc_id"), md5(col("text").cast("binary")).as("ch"),
-        isExisting.as("is_existing"))
-      .join(simhashMd5Of(docs), Seq("doc_id"))
-      .select("doc_id", "ch", "simhash16", "is_existing")
-      .localCheckpoint(false)
-    val exCh = sig.filter(col("is_existing"))
-      .select("ch").distinct().withColumn("ex_ch", lit(1))
-    val exSh = sig.filter(col("is_existing"))
-      .select("simhash16").distinct().withColumn("ex_sh", lit(1))
-    sig.filter(!col("is_existing"))
-      .join(exCh, Seq("ch"), "left")
-      .join(exSh, Seq("simhash16"), "left")
-      .select(col("doc_id"),
-        when(col("ex_ch") === 1, "dup_exact")
-          .when(col("ex_sh") === 1, "dup_near")
-          .otherwise("kept").as("status"))
+  def incrementalDedupOf(docs: DataFrame, isExisting: Column): DataFrame =
+    probeSignatureIndexAny(docs.filter(!isExisting),
+      signatureIndexOf(docs.filter(isExisting)))
       .orderBy("doc_id")
+
+  /** Each doc's (doc_id, content hash, 16-bit md5 simhash) in one
+    * projection; a null text gives no row. A consumer that reads only one
+    * key column plans only that key's hashing (column pruning). */
+  private def signaturesOf(docs: DataFrame): DataFrame =
+    docs.filter(col("text").isNotNull)
+      .select(col("doc_id"), md5(col("text").cast("binary")).as("ch"),
+        simhashMd5Kernel(tokensCol).as("simhash16"))
+
+  /** The x35 signature index: the historical docs' two DISTINCT key sets,
+    * content hashes (`ch`) and simhashes (`simhash16`). */
+  final case class SignatureIndex(contentHashes: DataFrame, simhashes: DataFrame)
+
+  /** The signature index as a PERSISTABLE artifact — what a daily ingest
+    * stores after each corpus refresh and probes on arrival (the e15
+    * streaming bridge writes each key set once through
+    * `Tables.materializeOnce`, the x122b stored-index motion). The sets
+    * are distinct'd here, at build time, so a probe never aggregates the
+    * index. */
+  def signatureIndexOf(existing: DataFrame): SignatureIndex = {
+    val sig = signaturesOf(existing)
+    SignatureIndex(sig.select("ch").distinct(), sig.select("simhash16").distinct())
   }
 
-  /** The x35 signature index as a PERSISTABLE artifact: each historical
-    * doc's (content hash, 16-bit md5 simhash) row — what a daily ingest
-    * stores after each corpus refresh and probes on arrival (the e15
-    * streaming bridge reads it back from parquet via
-    * `Tables.materializeOnce`, the x122b stored-index motion). Kept
-    * per-doc rather than pre-distinct'd: the probe's left-semi shape
-    * doesn't need distinctness, and the per-doc form also serves
-    * survivorship/audit consumers. */
-  def signatureIndexOf(existing: DataFrame): DataFrame =
-    existing
-      .select(col("doc_id"), md5(col("text").cast("binary")).as("ch"))
-      .join(simhashMd5Of(existing), Seq("doc_id"))
-      .select("ch", "simhash16")
-
   /** Probe an incoming (doc_id, text) frame — e.g. one micro-batch of the
-    * e15 ingest stream — against a stored signature index: `dup_exact` on
+    * e15 ingest stream — against a signature index: `dup_exact` on
     * content-hash membership, else `dup_near` on simhash collision, else
     * `kept`. Per-doc pure (no cross-batch state), so ANY batching of the
     * incoming set yields the same statuses — the property that lets the
-    * streamed form share x35's oracle. The index reduces to two DISTINCT
-    * short-key sets and both probes are hash equi-joins; at 100 TB the
-    * incoming batch is the small side by construction. */
-  def probeSignatureIndexAny(batch: DataFrame, index: DataFrame): DataFrame = {
-    val sig = batch
-      .select(col("doc_id"), md5(col("text").cast("binary")).as("ch"))
-      .join(simhashMd5Of(batch), Seq("doc_id"))
-    val exCh = index.select("ch").distinct().withColumn("ex_ch", lit(1))
-    val exSh = index.select("simhash16").distinct().withColumn("ex_sh", lit(1))
-    sig.join(exCh, Seq("ch"), "left")
-      .join(exSh, Seq("simhash16"), "left")
+    * streamed form share x35's oracle. The batch's keys are one
+    * projection; each key set is the build side of a left equi-join on a
+    * short key, so a stored index is read, never aggregated, per probe. */
+  def probeSignatureIndexAny(batch: DataFrame, index: SignatureIndex): DataFrame =
+    signaturesOf(batch)
+      .join(index.contentHashes.withColumn("ex_ch", lit(1)), Seq("ch"), "left")
+      .join(index.simhashes.withColumn("ex_sh", lit(1)), Seq("simhash16"), "left")
       .select(col("doc_id"),
         when(col("ex_ch") === 1, "dup_exact")
           .when(col("ex_sh") === 1, "dup_near")
           .otherwise("kept").as("status"))
-  }
 
   /** x73: Bloom-filter membership PRE-FILTER for incremental dedup — the
     * compact-index answer to "is this incoming doc already in 100 TB of

@@ -101,10 +101,11 @@ class Round15Spec extends SparkSpec {
     val got = graft.queries.SqlText.gate(spark, sfDir,
       graft.queries.SqlText.simhashTextSparkSql)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    // cross-IMPLEMENTATION twin: the hand-built per-bit vote aggregate
-    // (DocDedup.simhashMd5) vs the codegen'd graft_simhash expression —
-    // two independent constructions of the same 16-bit fingerprint
-    val want = DocDedup.simhashMd5(spark, sfDir)
+    // cross-IMPLEMENTATION twin: the per-bit vote aggregate
+    // (SimhashVoteTwin) vs the codegen'd graft_simhash expression — two
+    // independent constructions of the same 16-bit fingerprint. x4b itself
+    // runs graft_simhash's kernel, so it cannot serve as the twin.
+    val want = SimhashVoteTwin(graft.Tables.documents(spark, sfDir))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got == want, s"sql5 fingerprints diverged from the x4b twin: " +
       s"${(got.toSet -- want.toSet).take(3)}")

@@ -3,14 +3,26 @@ package graft.streaming
 import graft.SparkSpec
 import java.nio.file.Files
 import java.sql.Timestamp
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, MicroBatchExecution}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 
 // top-level: Dataset encoders for inner-class case classes need an outer
 // scope; keep it simple
 case class Ev(event_id: Long, ts: Timestamp, user_id: Long, event_type: String, value: Double)
 
-class StreamingSpec extends SparkSpec {
+class StreamingSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
@@ -395,6 +407,49 @@ class StreamingSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(whole == x35,
       s"probe≠x35: onlyProbe=${(whole -- x35).take(3)}, onlyX35=${(x35 -- whole).take(3)}")
+  }
+
+  test("e15: a trigger runs at most 3 jobs and never aggregates or shuffles the index") {
+    // per micro-batch: the two key-set broadcasts and the sink write; the
+    // index's distinct key sets are built once, before the stream starts
+    val jobsPerBatch = new ConcurrentHashMap[String, AtomicLong]()
+    val jobs = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty(MicroBatchExecution.BATCH_ID_KEY)))
+          .foreach(b => jobsPerBatch.computeIfAbsent(b, _ => new AtomicLong).incrementAndGet())
+    }
+    val batchPlans = new ConcurrentLinkedQueue[SparkPlan]()
+    val plans = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        collectFirst(qe.executedPlan) {
+          case w @ DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _)
+              if c.outputPath.getParent.getName.startsWith("graft_e15_out_") => w.child
+        }.foreach(batchPlans.add)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(jobs)
+    spark.listenerManager.register(plans)
+    val rows = try {
+      val out = EventsStream.incrementalDedupStreamGate(spark, sfDir).count()
+      ListenerDrain(sc)
+      out
+    } finally {
+      sc.removeSparkListener(jobs)
+      spark.listenerManager.unregister(plans)
+    }
+    val perBatch = jobsPerBatch.asScala.map { case (b, n) => b -> n.get }.toMap
+    assert(rows > 0 && perBatch.size == 2, s"jobs per batch: $perBatch")
+    assert(perBatch.values.forall(_ <= 3), s"jobs per batch: $perBatch")
+    assert(batchPlans.size == 2, s"${batchPlans.size} foreachBatch writes seen")
+    batchPlans.asScala.foreach { plan =>
+      // the two stored key sets (foreachBatch hands the batch over as an RDD)
+      assert(collect(plan) { case s: FileSourceScanExec => s }.size == 2, plan.treeString)
+      assert(collect(plan) {
+        case a: BaseAggregateExec => a
+        case e: ShuffleExchangeExec => e
+      }.isEmpty, plan.treeString)
+    }
   }
 
   test("e16: routed verdicts equal batch scoring against the frozen model; routes partition") {
